@@ -47,24 +47,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda t: t != "")
 
 
-def word_shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles as space-joined strings.
-
-    transform over sequence(1, size-n+1) + slice — no explode until the
-    caller needs one row per shingle. Guarded for size < n (Spark's
-    ``sequence(1, 0)`` would generate a *descending* sequence).
-    """
-    shingled = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
-    return F.when(F.size(toks) >= n, shingled).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def n_tokens(toks: Column) -> Column:
     return F.size(toks).cast("bigint")
 
@@ -172,43 +154,13 @@ def dd_md5_uniform_int(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def simhash64(toks: Column) -> Column:
-    """64-bit SimHash over token xxhash64 values — pure columnar bit math.
-
-    For each of 64 bit positions, sum +1/-1 votes across token hashes and
-    set the bit when the vote is positive. Column-only implementation:
-    aggregate over the token array per bit via transform + aggregate.
-    Near-dup docs differ in few bits (Hamming distance).
-    Not SQL-portable (xxhash64 seed/impl) -> rows-only verification.
-    """
-    hashes = F.transform(F.array_distinct(toks), lambda t: F.xxhash64(t))
-
-    def bit_vote(b: int) -> Column:
-        # majority vote for bit b across token hashes (+1 set / -1 unset)
-        vote = F.aggregate(
-            hashes,
-            F.lit(0).cast("bigint"),
-            lambda acc, h: acc
-            + F.when(F.getbit(h, F.lit(b)) == 1, F.lit(1)).otherwise(F.lit(-1)),
-        )
-        mask = (1 << b) if b < 63 else -(1 << 63)  # avoid signed-long overflow
-        return F.when(vote > 0, F.lit(mask).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-
-    out = F.lit(0).cast("bigint")
-    for b in range(64):
-        out = out.bitwiseOR(bit_vote(b))
-    return out
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
 def word_shingles_all(toks: Column, n: int = 3) -> Column:
     """ALL n-word shingles (duplicates kept — the denominator for
-    repetition ratios; :func:`word_shingles` is the distinct variant)."""
+    repetition ratios)."""
     shingled = F.transform(
         F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
         lambda i: F.concat_ws(" ", F.slice(toks, i, n)),

@@ -1,16 +1,8 @@
 """Vector math over ``array<float>`` embedding columns.
 
-Two tiers, chosen per call site:
-- pure Column expressions (JVM-side fold): bit-comparable with the DuckDB
-  oracle (list_inner_product over DOUBLE[] folds in the same order), fine
-  when evaluated once per row or on small candidate sets;
-- :func:`pandas_dot`: Arrow-batched numpy matmul for per-PAIR hot paths
-  (all-pairs scoring) — higher-order-function folds evaluate their lambda
-  interpreted per element, and Catalyst will happily inline them into a
-  nested-loop join condition; a Pandas UDF is both ~100x faster and
-  *cannot* be pushed into a join condition, pinning the plan to
-  join-then-score. Sum order differs from the fold at ~1e-15 relative —
-  absorbed by the driver's 6-significant-digit hash rounding.
+Pure Column expressions (JVM-side fold): bit-comparable with the DuckDB
+oracle (list_inner_product over DOUBLE[] folds in the same order), fine
+when evaluated once per row or on small candidate sets.
 """
 
 from __future__ import annotations
@@ -94,27 +86,6 @@ def euclidean(a: Column | str, b: Column | str, dim: int | None = None) -> Colum
         d = _col(a)[i] - _col(b)[i]
         expr = expr + d * d
     return F.sqrt(expr)
-
-
-def pandas_dot():
-    """Arrow-vectorized row-wise dot product UDF: (array, array) -> double.
-
-    Built per call (no type hints: ``from __future__ import annotations``
-    breaks pyspark's hint inference for function-local imports).
-    """
-    from pyspark.sql.types import DoubleType
-
-    def _dot(a, b):
-        import numpy as np
-        import pandas as pd
-
-        if len(a) == 0:
-            return pd.Series([], dtype=float)
-        ma = np.vstack(a.to_numpy())
-        mb = np.vstack(b.to_numpy())
-        return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-    return F.pandas_udf(_dot, DoubleType())
 
 
 # DuckDB twins (embedding columns arrive as FLOAT[]; cast first) ------------

@@ -4,7 +4,7 @@ Five strategies, cheapest first:
 
 - exact (hash groupBy on content or content-hash)
 - n-gram Jaccard (shingle explode -> shingle-key self-join -> similarity)
-- MinHash + LSH banding (spark.ml MinHashLSH) — the scale path for fuzzy
+- MinHash + LSH banding (native md5 signatures) — the scale path for fuzzy
   dedup: candidate pairs come from band-bucket joins, not O(n^2)
 - SimHash (64-bit fingerprint; near-dups = small Hamming distance)
 - embedding cosine near-dup (delegates to operators/similarity.py)
@@ -430,8 +430,8 @@ def _shingle_base_rows(
     engine-portable base hash (first 15 hex chars of md5 of the
     space-joined gram, the same scheme dsir.hash_bucket uses).
 
-    Shingle extraction is ONE codegen regex pass, not the interpreted
-    ``word_shingles`` transform (a lambda HOF evaluates per row outside
+    Shingle extraction is ONE codegen regex pass, not an interpreted
+    transform over token slices (a lambda HOF evaluates per row outside
     codegen — measured 12s of the 13.3s sf10 base build; the regex path
     is 3.5s with the identical (doc, h) output set). Spaces are
     normalized first so each overlapping n-gram is captured by a
@@ -441,7 +441,7 @@ def _shingle_base_rows(
     is unchanged. A posexplode + window ``lead`` formulation was also
     rejected earlier: codegen concat, but a full shuffle+sort before
     the distinct. Per-doc dedup is left to the global ``.distinct()``
-    (same result set as word_shingles' array_distinct)."""
+    (same result set as a per-doc array_distinct)."""
     gram_pat = "(?=((?:[^ ]+ ){%d}[^ ]+))[^ ]+(?: |$)" % (n - 1)
     norm = F.trim(F.regexp_replace(F.col(content_col), " +", " "))
     return (
@@ -877,52 +877,6 @@ def minhash_cross_corpus_dupes(
     ).filter(F.col("est_jaccard") >= jaccard_threshold)
 
 
-def minhash_lsh_dupes_ml(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hash_tables: int = 8,
-    jaccard_threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """spark.ml MinHashLSH variant of :func:`minhash_lsh_dupes` (HashingTF
-    sparse vectors + ``approxSimilarityJoin``). Kept as the API-parity path
-    for pipelines already standardized on ``pyspark.ml``; the native variant
-    benches faster (no fit pass, no vector conversion)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    toks = (
-        df.select(
-            F.col(id_col).alias("doc"),
-            T.tokens(F.col(content_col)).alias("__toks"),
-        )
-        .select(
-            "doc", T.word_shingles(F.col("__toks"), n).alias("shingles")
-        )
-        .filter(F.size("shingles") > 0)
-    )
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True
-    )
-    feats = tf.transform(toks)
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-    )
-    model = mh.fit(feats)
-    pairs = model.approxSimilarityJoin(
-        feats, feats, 1.0 - jaccard_threshold, distCol="jaccard_dist"
-    )
-    return (
-        pairs.select(
-            F.col("datasetA.doc").alias("doc_a"),
-            F.col("datasetB.doc").alias("doc_b"),
-            (1 - F.col("jaccard_dist")).alias("est_jaccard"),
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-    )
-
-
 #: SimHash fingerprint width: 60 bits — the md5-derived base hash
 #: (15 hex chars, the engine-portable scheme shared with MinHash/DSIR)
 #: supplies exactly 60 independent bits, and a nonneg-bigint fingerprint
@@ -937,8 +891,8 @@ def simhash_fingerprints(
     engine-portable md5 base hash (DuckDB twin reproduces fingerprints
     bit-for-bit).
 
-    The naive formulation (an array-aggregate per bit per row,
-    functions.text.simhash64) produces a codegen-hostile expression tree;
+    The naive formulation (an array-aggregate per bit per row) produces
+    a codegen-hostile expression tree;
     this one explodes distinct tokens (narrow -> one shuffle on the id)
     and computes the bit votes as plain grouped sums — far cheaper to
     compile and the shape that scales: shuffle rows = total distinct

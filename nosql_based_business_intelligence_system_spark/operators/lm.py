@@ -75,7 +75,7 @@ def ckpt_actual_bytes(df: DataFrame) -> int | None:
 def token_bigrams(toks: Column) -> Column:
     """(prev, cur) struct per adjacent token pair — transform over an index
     sequence, no explode until the caller needs rows. Empty for size < 2
-    (``sequence(1, 0)`` would descend; guard like word_shingles)."""
+    (``sequence(1, 0)`` would descend; guard like word_shingles_all)."""
     pair = lambda i: F.struct(  # noqa: E731
         F.element_at(toks, i).alias("prev"),
         F.element_at(toks, i + F.lit(1)).alias("cur"),

@@ -289,10 +289,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: The candidate-pair CTE prefix (shingle -> common-count -> >=0.5 Jaccard
 #: pairs) shared VERBATIM by the ``dedup_clusters`` oracle below and
-#: ``tools/verify_clusters_closure.py``'s big-scale edge-list extraction —
-#: a named constant so the two cannot drift (the closure tool previously
-#: sliced the oracle text with ``oracle.index(', edges AS')``, which any
-#: reformatting would silently break).
+#: the big-scale edge-list extraction of ``tools/verify_local.py --tail`` —
+#: a named constant so the two cannot drift (slicing the oracle text at
+#: ``', edges AS'`` would silently break on any reformatting).
 DEDUP_CLUSTER_PAIR_CTES = f"""sh AS (
   SELECT doc_id AS doc, len(sh_list) AS n_sh, unnest(sh_list) AS shingle
   FROM (SELECT doc_id, {T.dd_shingles(_TOKS, 3)} AS sh_list FROM documents)

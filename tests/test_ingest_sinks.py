@@ -30,20 +30,27 @@ def _write_csv(d: str) -> str:
 
 def test_ingest_csv_cleans_and_coerces(spark):
     with tempfile.TemporaryDirectory() as d:
-        df = ingest.ingest_csv(spark, _write_csv(d))
-        assert set(df.columns) >= {
-            "doc_number", "customer_number", "total_line_price", "quantity",
-            "trans_date", "region_desc", "event_date",
-        }
-        assert "unnamed_0" not in df.columns  # P2 drop
-        rows = {r.doc_number: r for r in df.collect()}
-        assert rows["D2"].total_line_price is None  # NF1 coerce
-        assert rows["D3"].quantity is None
-        assert rows["D3"].trans_date is None  # DF1 coerce
-        assert rows["D1"].region_desc == "North"  # SF1 trim
-        assert rows["D2"].region_desc is None  # SF2 sentinel
-        assert rows["D3"].region_desc is None
-        assert rows["D1"].event_date.isoformat() == "2024-01-10"
+        raw = _write_csv(d)
+        # S2 round trip: the messy rows read as plain strings and dumped
+        # through write_csv must ingest exactly like the original file.
+        dumped = os.path.join(d, "dumped")
+        sinks.write_csv(spark.read.option("header", True).csv(raw), dumped)
+        for path in (raw, dumped):
+            df = ingest.ingest_csv(spark, path)
+            assert set(df.columns) >= {
+                "doc_number", "customer_number", "total_line_price", "quantity",
+                "trans_date", "region_desc", "event_date",
+            }, path
+            assert "unnamed_0" not in df.columns  # P2 drop
+            rows = {r.doc_number: r for r in df.collect()}
+            assert sorted(rows) == ["D1", "D2", "D3", "D4"], path
+            assert rows["D2"].total_line_price is None  # NF1 coerce
+            assert rows["D3"].quantity is None
+            assert rows["D3"].trans_date is None  # DF1 coerce
+            assert rows["D1"].region_desc == "North"  # SF1 trim
+            assert rows["D2"].region_desc is None  # SF2 sentinel
+            assert rows["D3"].region_desc is None
+            assert rows["D1"].event_date.isoformat() == "2024-01-10"
 
 
 def test_find_column_fuzzy():

@@ -30,7 +30,7 @@ Phases, each resumable from the state file in --workdir:
      pre-check (pricing the twin's scratch the way the engine's
      pair_disk_guard prices its own pair stages — the r10 ENOSPC death was
      exactly a twin spilling into a disk something else was filling).
-  4. tail: the minhash tail check (tools/verify_minhash_tail_sf100.py)
+  4. tail: the minhash tail check (``verify_local --tail``)
      as a recorded per-query mode — keep/clusters re-derived by an
      independent python union-find from the Spark pair list, compared
      against the spark-phase recordings (r11 advisory 7: one artifact,
@@ -358,7 +358,7 @@ def phase_oracle(sf_dir, workdir, state, plan, duckdb_mem, only, force):
 
 
 #: Queries whose sf100 evidence comes from the minhash TAIL check
-#: (tools/verify_minhash_tail_sf100.py): the DuckDB twins are proven
+#: (``verify_local --tail``): the DuckDB twins are proven
 #: infeasible at sf100 (recorded oracle deaths), so an independent
 #: python union-find re-derives keep/clusters from the Spark pair list
 #: and compares against the --spark-only recordings.
@@ -381,8 +381,8 @@ def phase_tail(sf_dir, workdir, state, spark_mem, force):
         return
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM=spark_mem)
     rc, out, wall = _run(
-        [sys.executable, os.path.join(REPO, "tools", "verify_minhash_tail_sf100.py"),
-         sf_dir, rec_path],
+        [sys.executable, os.path.join(REPO, "tools", "verify_local.py"),
+         f"--tail={rec_path}", sf_dir, *TAIL_QUERIES],
         timeout=3600,
         env=env,
     )

@@ -136,8 +136,7 @@ def _existing_scale_notes() -> str | None:
     """Carry forward the hand-maintained '## Scale notes' sections from the
     CURRENT PLANS.md (everything from the first such heading up to the
     first flagship plan heading). Rounds append notes to PLANS.md directly;
-    regeneration must not destroy them (pre-r7 it silently did — the
-    baked-in constant below had gone stale at round 4)."""
+    regeneration must not destroy them. Returns None when there are none."""
     path = os.path.join(REPO, "PLANS.md")
     try:
         text = open(path).read()
@@ -155,82 +154,6 @@ def _existing_scale_notes() -> str | None:
     return block.rstrip()
 
 
-#: Fallback scale notes (used only if PLANS.md is missing or has no notes
-#: section), emitted verbatim ahead of the generated plans.
-SCALE_NOTES = """## Scale notes (round 4)
-
-**sf1 rehearsal (2026-08-14).** The driver ships sf<=0.1; a synthetic sf1
-(10x sf0.1, FK-consistent key-shifted replication with per-replica text/
-embedding perturbation — `tools/make_sf.py`) runs the full 20-query
-headline set on the same local[32]: **49.8s vs 22.0s at sf0.1 — 2.3x wall
-for 10x data, every query sub-linear** (best-of-2, post money-campaign):
-
-| query | sf0.1 s | sf1 s | ratio | | query | sf0.1 s | sf1 s | ratio |
-|---|---|---|---|---|---|---|---|---|
-| sales_by_fiscal_month | 1.55 | 1.60 | 1.0x | | ann_bruteforce_topk | 0.64 | 2.66 | 4.1x |
-| pricing_summary | 1.62 | 1.74 | 1.1x | | ann_ivf_topk | 1.19 | 3.82 | 3.2x |
-| top_building_orders | 0.77 | 2.64 | 3.4x | | doc_text_stats | 0.52 | 3.19 | 6.2x |
-| regional_revenue | 0.74 | 1.37 | 1.9x | | doc_lm_perplexity | 1.61 | 5.51 | 3.4x |
-| nation_trade_flows | 0.90 | 1.55 | 1.7x | | token_heavy_hitters | 1.19 | 3.30 | 2.8x |
-| large_volume_customers | 0.64 | 1.89 | 3.0x | | events_multires_rollup | 0.69 | 0.55 | 0.8x |
-| monthly_revenue_running | 1.11 | 1.07 | 1.0x | | mongo_region_quarter_revenue | 1.28 | 2.10 | 1.6x |
-| revenue_trailing_7d | 0.48 | 0.69 | 1.5x | | part_name_entities | 2.13 | 3.19 | 1.5x |
-| dedup_minhash | 2.66 | 9.37 | 3.5x | | distinct_count_sketches | 0.99 | 2.16 | 2.2x |
-| dedup_exact_summary | 0.29 | 0.38 | 1.3x | | summary_stats | 0.96 | 1.00 | 1.0x |
-
-No query exceeds 6.2x for 10x data (the document-bound pair —
-doc_text_stats, dedup_minhash — scales with the 10x documents table and
-stays sub-linear). One config finding fixed along the way: local mode's
-default 1g driver heap OOM'd building a 64 MB broadcast at sf1 —
-`session.get_spark` now sizes the local JVM (`SPARK_GRAFT_DRIVER_MEM`,
-default 16g); on a cluster this is ordinary executor/driver sizing.
-
-**IVF/PQ registry policy change (round 4).** The r3 pinned policy
-(Lloyd=1 over a 4096-row md5 sample) is superseded ON THE REGISTRY
-QUERIES by the portable-quantizer mode `refine_iterations=0`: centroids /
-PQ codewords are md5-chosen corpus rows, so `ann_ivf_topk`, `ann_pq_topk`
-and `semantic_dedup_survivors` now replay bit-for-bit in generated DuckDB
-twins (hash-verified, previously rows-only) — the r4 verdict's lead item.
-Latency side effect: ann_ivf_topk 1.82s (r3 driver) -> 1.25s (no sample
-draw, no Lloyd). The Lloyd-refined trainer remains the operator default
-for quality-sensitive callers and keeps pytest recall coverage; r1-r3
-ann_ivf/ann_pq bench numbers are not directly comparable to r4+.
-
-**Bench methodology (round 4).** Warm-up is one full untimed iteration of
-every headline query at the target sf (r3 warmed 12 expression families
-at sf0.001 and left ~3s of first-touch cost in the driver's timings);
-timed numbers are best-of-2 per query, declared as `iters` in the JSON.
-
-**sf1 correctness sweep & the money-portability campaign (round 4).** The
-full 152-query registry was also ORACLE-VERIFIED at the synthetic sf1 —
-which initially failed 29 queries, every one a money aggregate that had
-been green at sf<=0.1 by summation-order luck. Three distinct hazards were
-isolated and closed engine-wide:
-1. *Double money sums drift with partial-agg order.* Every money SUM/AVG
-   now accumulates in exact DECIMAL(38,6) (`dsum*` helpers; Mongo
-   pipelines use the Decimal128 idiom `{"$sum": {"$toDecimal": ...}}`).
-2. *The decimal->double output cast itself double-rounds.* Above 2^53
-   scaled units (~9e9 at scale 6) DuckDB computes hugeint/10^scale in
-   double arithmetic while Java rounds once — 1-ulp divergence. All
-   boundaries now cast via STRING (`dec2d`/`dd_dec2d`): decimal->string
-   is exact and string->double is correctly rounded on both engines, so
-   the result is THE nearest double, identically.
-3. *Exact-percentile interpolation differs on duplicate-heavy data.*
-   Spark short-circuits lowerKey==higherKey to the value; DuckDB's
-   quantile_cont computes the weighted form whose weights sum to ~1
-   (1-ulp drift). The twins now replicate Spark's formula from order
-   statistics (`stats_suite._dd_spark_percentile`).
-After the campaign the registry is 148-hash-green + 4 rows-only at
-sf0.001, sf0.01, sf0.1 AND sf1 — correctness claims no longer depend on
-fixture scale. Cost: visible per-query (pricing_summary 0.45->1.6s,
-sales_by_fiscal_month 0.8->1.5s — decimal accumulation is ~3x a double
-sum) while the headline total stays in the 20-22s band at sf0.1 (idle
-runs vary ~10%; final recorded run 19.8s) — accepted: order-independent
-money arithmetic is what makes results reproducible on ANY partitioning,
-which is the 100 TB contract.
-"""
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF
 
@@ -245,9 +168,10 @@ def main() -> int:
         f"Generated by `tools/dump_plans.py` at `{sf_dir}` "
         "(regenerate after plan-affecting changes).",
         "",
-        _existing_scale_notes() or SCALE_NOTES,
-        "",
     ]
+    notes = _existing_scale_notes()
+    if notes:
+        out += [notes, ""]
     for name, note in FLAGSHIPS.items():
         df = QUERIES[name].fn(spark, sf_dir)
         shuffles = I.count_exchanges(df)

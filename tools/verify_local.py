@@ -7,17 +7,25 @@ then compares row count, column names, and an order-insensitive value hash
 Queries without an oracle get a rows-only report.
 
 Usage: python tools/verify_local.py [--sig6] [--determinism] [--sample=N]
-           [--spark-only=F | --oracle-only=F] [sf_dir] [query ...]
+           [--spark-only=F | --oracle-only=F | --tail=F] [sf_dir] [query ...]
 
 ``--sample=N`` runs the SAMPLED big-scale twin (see ``_sampled``): both
 engines keep only output rows whose md5(sample_col) starts with N zero hex
 chars, making quadratic twins affordable at sf100. Only queries that
 declare ``Query.sample_col`` participate; the rest are skipped.
+
+``--tail=F`` checks ``--spark-only`` recordings in F for the dedup twins
+whose full DuckDB oracle does not complete at big scale (see
+``TAIL_CHECKS``): a different exact algorithm re-derives each output from
+an edge list and hashes it the same way. Named queries pick the checks;
+none runs them all.
 """
 
 from __future__ import annotations
 
+import collections
 import hashlib
+import json
 import math
 import os
 import sys
@@ -112,70 +120,14 @@ def _sampled(q, n: int):
 
 def _write_json_atomic(path: str, obj) -> None:
     """tmp+rename so a kill mid-write can't leave a truncated recording."""
-    import json
-
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(obj, f)
     os.replace(tmp, path)
 
 
-def main() -> int:
-    global FLOAT_SIG
-    if "--sig6" in sys.argv[1:]:
-        FLOAT_SIG = 6
-    # Split mode for twins too big to share one box with a live JVM
-    # (the sf10 shingle self-join spills >24GB while Spark scratch holds
-    # the rest of the disk): --spark-only=F runs just the Spark side and
-    # records (rows, hash, cols) to F; --oracle-only=F runs just DuckDB
-    # in a JVM-free process (whole-box memory, whole-disk spill) and
-    # compares against F.
-    spark_only = oracle_only = None
-    sample_n = None
-    flag_args = []
-    for a in sys.argv[1:]:
-        if a.startswith("--spark-only="):
-            spark_only = a.split("=", 1)[1]
-            flag_args.append(a)
-        elif a.startswith("--oracle-only="):
-            oracle_only = a.split("=", 1)[1]
-            flag_args.append(a)
-        elif a.startswith("--sample="):
-            sample_n = int(a.split("=", 1)[1])
-            # n < 1 would run UNSAMPLED while stamping {"sample": 0} into
-            # recordings — a later plain compare (sample=None) would then
-            # spuriously FAIL on 0 != None even though both runs were full
-            if sample_n < 1:
-                print(f"--sample={sample_n} invalid: need n >= 1")
-                return 2
-            flag_args.append(a)
-    if sample_n:
-        print(
-            f"SAMPLED mode: md5-prefix {'0' * sample_n} (16^-{sample_n} of"
-            " output rows) on each query's declared sample_col; queries"
-            " without one are skipped"
-        )
-    args = [
-        a
-        for a in sys.argv[1:]
-        if a not in ("--determinism", "--sig6") and a not in flag_args
-    ]
-    determinism = "--determinism" in sys.argv[1:]
-    sf_dir = args[0] if args else DEFAULT_SF
-    only = set(args[1:])
-
-    import json
-
-    from nosql_based_business_intelligence_system_spark.queries import QUERIES
-
-    if oracle_only:
-        with open(oracle_only) as f:
-            recorded = json.load(f)
-        spark = None
-    else:
-        from nosql_based_business_intelligence_system_spark.session import get_spark
-
-        spark = get_spark(app_name="verify-local")
+def _duckdb(sf_dir: str):
+    """DuckDB connection with one view per fixture table of ``sf_dir``."""
     con = duckdb.connect()
     # DuckDB's default memory ceiling (80% of RAM) ignores the Spark JVM
     # sharing the box; a heavy twin then OOM-kills the whole process
@@ -202,6 +154,222 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
+
+
+def _min_label_components(edges) -> list[tuple]:
+    """(cluster_id, n_members) per connected component of an edge list,
+    each component labelled by its minimum node id. Plain-dict union-find
+    (the smaller root always wins, so every root is its set's minimum) —
+    independent of both Spark's pointer-jumping closure and the oracle's
+    recursive-CTE reach closure, which label components the same way."""
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return list(collections.Counter(find(node) for node in parent).items())
+
+
+def _tail_dedup_clusters(con, sf_dir: str) -> dict:
+    """Trigram ``dedup_clusters``: the oracle's recursive CTE accumulates
+    every (node, reachable comp) pair, quadratic in cluster size, and at
+    sf10 spills past the box's scratch. DuckDB computes only the dupes
+    EDGE LIST, from the oracle's own CTE prefix so the candidate semantics
+    cannot drift; union-find resolves the closure. At sf10 give DuckDB the
+    box (``SPARK_GRAFT_DUCKDB_MEM=100GB``)."""
+    from nosql_based_business_intelligence_system_spark.queries.text_suite import (
+        DEDUP_CLUSTER_PAIR_CTES,
+    )
+
+    edges = con.execute(
+        f"WITH {DEDUP_CLUSTER_PAIR_CTES} SELECT doc_a, doc_b FROM dupes"
+    ).fetchall()
+    print(f"[tail] {len(edges)} dupe edges via DuckDB", flush=True)
+    return {
+        "dedup_clusters": (
+            _min_label_components(edges), ["cluster_id", "n_members"]
+        )
+    }
+
+
+#: Collect ceiling for the Spark-side MinHash edge list (the capped sf100
+#: pair list is a few hundred thousand rows).
+TAIL_EDGE_CAP = 20_000_000
+
+
+def _tail_minhash(con, sf_dir: str) -> dict:
+    """Guarded MinHash keep set and clusters: at sf100 the twins'
+    signature+banding pipeline (1.5e9 shingle rows x 64 min-hashes)
+    exceeds the box's RAM and spill disk, and an output-side sample cannot
+    prune it. Spark recomputes the guarded pair list exactly as the
+    registry entries do and collects the edges; Python derives the keep
+    set (all doc ids minus every pair's higher id) and the union-find
+    clusters, with doc ids read via DuckDB. The pair list itself stays
+    covered by the full twins at smaller scale."""
+    from nosql_based_business_intelligence_system_spark.operators import dedup
+    from nosql_based_business_intelligence_system_spark.queries.text_suite import (
+        MINHASH_BAND_CAP,
+        _docs,
+        _pair_guard_on,
+    )
+    from nosql_based_business_intelligence_system_spark.session import get_spark
+
+    spark = get_spark(app_name="verify-local")
+    pairs = dedup.minhash_lsh_dupes(
+        _docs(spark, sf_dir),
+        jaccard_threshold=0.5,
+        max_docs_per_band_key=MINHASH_BAND_CAP,
+        disk_guard=_pair_guard_on(spark, sf_dir),
+    ).select("doc_a", "doc_b")
+    # One pipeline execution: count and collect read the checkpoint
+    # instead of re-running the signature+banding stages.
+    pairs = pairs.localCheckpoint(eager=True)
+    n_edges = pairs.count()
+    if n_edges > TAIL_EDGE_CAP:
+        raise RuntimeError(
+            f"{n_edges} edges exceeds the {TAIL_EDGE_CAP} collect cap"
+        )
+    edges = [(r.doc_a, r.doc_b) for r in pairs.collect()]
+    print(f"[tail] {len(edges)} pair edges via Spark", flush=True)
+    dropped = {b for _a, b in edges}
+    keep = [
+        r
+        for r in con.execute("SELECT doc_id FROM documents").fetchall()
+        if r[0] not in dropped
+    ]
+    return {
+        "dedup_fuzzy_keep_minhash": (keep, ["doc_id"]),
+        "dedup_clusters_minhash": (
+            _min_label_components(edges), ["cluster_id", "n_members"]
+        ),
+    }
+
+
+#: Tail check -> the registry queries whose recordings it checks.
+TAIL_CHECKS = {
+    _tail_dedup_clusters: ("dedup_clusters",),
+    _tail_minhash: ("dedup_fuzzy_keep_minhash", "dedup_clusters_minhash"),
+}
+
+
+def _run_tails(rec_path: str, sf_dir: str, only: set) -> int:
+    with open(rec_path) as f:
+        recorded = json.load(f)
+    covered = {n for names in TAIL_CHECKS.values() for n in names}
+    failures = sorted(only - covered)
+    for name in failures:
+        print(f"FAIL  {name}: no tail check (have {sorted(covered)})")
+    con = _duckdb(sf_dir)
+    for check, names in TAIL_CHECKS.items():
+        names = [n for n in names if not only or n in only]
+        if not names:
+            continue
+        t0 = time.time()
+        try:
+            results = check(con, sf_dir)
+        except Exception:
+            print(f"FAIL  {', '.join(names)}: tail error\n{traceback.format_exc()}")
+            failures += names
+            continue
+        for name in names:
+            rows, cols = results[name]
+            tn, th = table_digest(rows, cols)
+            rec = recorded.get(name)
+            if rec is None or rec.get("sample") is not None:
+                # a sampled recording hashes a different row set
+                why = "no recording" if rec is None else "recording is sampled"
+                print(f"FAIL  {name}: {why} in {rec_path}")
+                failures.append(name)
+                continue
+            ok = (
+                rec["rows"] == tn
+                and sorted(rec["cols"]) == sorted(cols)
+                and rec["hash"] == th
+            )
+            status = "OK   " if ok else "FAIL "
+            print(
+                f"{status} {name}: spark {rec['rows']} rows h={rec['hash']}"
+                f" | tail {tn} rows h={th} [{time.time()-t0:.1f}s]"
+            )
+            if not ok:
+                failures.append(name)
+    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    return 1 if failures else 0
+
+
+def main() -> int:
+    global FLOAT_SIG
+    if "--sig6" in sys.argv[1:]:
+        FLOAT_SIG = 6
+    # Split mode for twins too big to share one box with a live JVM
+    # (the sf10 shingle self-join spills >24GB while Spark scratch holds
+    # the rest of the disk): --spark-only=F runs just the Spark side and
+    # records (rows, hash, cols) to F; --oracle-only=F runs just DuckDB
+    # in a JVM-free process (whole-box memory, whole-disk spill) and
+    # compares against F.
+    spark_only = oracle_only = tail = None
+    sample_n = None
+    flag_args = []
+    for a in sys.argv[1:]:
+        if a.startswith("--spark-only="):
+            spark_only = a.split("=", 1)[1]
+            flag_args.append(a)
+        elif a.startswith("--oracle-only="):
+            oracle_only = a.split("=", 1)[1]
+            flag_args.append(a)
+        elif a.startswith("--tail="):
+            tail = a.split("=", 1)[1]
+            flag_args.append(a)
+        elif a.startswith("--sample="):
+            sample_n = int(a.split("=", 1)[1])
+            # n < 1 would run UNSAMPLED while stamping {"sample": 0} into
+            # recordings — a later plain compare (sample=None) would then
+            # spuriously FAIL on 0 != None even though both runs were full
+            if sample_n < 1:
+                print(f"--sample={sample_n} invalid: need n >= 1")
+                return 2
+            flag_args.append(a)
+    if sample_n:
+        print(
+            f"SAMPLED mode: md5-prefix {'0' * sample_n} (16^-{sample_n} of"
+            " output rows) on each query's declared sample_col; queries"
+            " without one are skipped"
+        )
+    args = [
+        a
+        for a in sys.argv[1:]
+        if a not in ("--determinism", "--sig6") and a not in flag_args
+    ]
+    determinism = "--determinism" in sys.argv[1:]
+    sf_dir = args[0] if args else DEFAULT_SF
+    only = set(args[1:])
+    if tail:
+        if spark_only or oracle_only or sample_n or determinism:
+            print("--tail checks existing full recordings; it takes no other mode")
+            return 2
+        return _run_tails(tail, sf_dir, only)
+
+    from nosql_based_business_intelligence_system_spark.queries import QUERIES
+
+    if oracle_only:
+        with open(oracle_only) as f:
+            recorded = json.load(f)
+        spark = None
+    else:
+        from nosql_based_business_intelligence_system_spark.session import get_spark
+
+        spark = get_spark(app_name="verify-local")
+    con = _duckdb(sf_dir)
 
     if oracle_only:
         # A query with an oracle but NO recording means the --spark-only
